@@ -43,11 +43,11 @@ from pyspark.sql import functions as F
 
 from ..operators import textstats as X
 from ..operators.bloom import (
+    BLOOM_TABLE_SCHEMA,
     ShardedBloom,
     bloom_merge_delta_cogroup,
     bloom_probe_cogroup,
     build_bloom_sharded,
-    empty_bloom_shard_table,
     sharded_might_contain_udf,
 )
 from ..operators.cuckoo import (
@@ -604,6 +604,9 @@ def run_crawl(
 
     bf: ShardedBloom | None = None
     bloom_tbl: DataFrame | None = None
+    bloom_size = dict(
+        n_shards=cfg.bloom_shards, n_items=cfg.n_expected_urls, fpp=cfg.bloom_fpp
+    )
     ccf: ShardedCuckoo | None = None
     if cfg.filter_mode == "bloom":
         seen_now = url_seen if resume and start_iter > 0 else None
@@ -620,22 +623,27 @@ def run_crawl(
             )
     elif cfg.filter_mode == "bloom_table":
         # filter-as-table: resume from the manifest's bloom snapshot if
-        # present, else rebuild distributed from url_seen. The driver only
-        # ever plans these jobs — no bitmap/hash bytes cross to it.
+        # present, else start from an EMPTY (shard, n_bits, k, bits) table.
+        # The delta merge creates a shard's zero bitmap when its first
+        # hashes arrive and the probe reads a missing shard as "not seen",
+        # so a fresh run writes no all-zero table; a resume without a bloom
+        # snapshot rebuilds from url_seen through the same merge. The
+        # driver only ever plans these jobs — no bitmap/hash bytes cross
+        # to it.
         m = read_manifest(state_dir) if resume else None
         if m is not None and m.get("bloom") and os.path.exists(m["bloom"]):
             bloom_tbl = spark.read.parquet(m["bloom"])
         else:
-            bloom_tbl = empty_bloom_shard_table(
-                spark, cfg.n_expected_urls, cfg.bloom_fpp, cfg.bloom_shards
-            )
+            bloom_tbl = spark.createDataFrame([], BLOOM_TABLE_SCHEMA)
             if resume and start_iter > 0:
-                bloom_tbl = bloom_merge_delta_cogroup(
-                    url_seen.select(F.xxhash64("url").alias("url_hash")),
-                    bloom_tbl,
-                    n_shards=cfg.bloom_shards,
+                bloom_tbl = _snapshot(
+                    bloom_merge_delta_cogroup(
+                        url_seen.select(F.xxhash64("url").alias("url_hash")),
+                        bloom_tbl,
+                        **bloom_size,
+                    ),
+                    f"{state_dir}/bloom_init",
                 )
-            bloom_tbl = _snapshot(bloom_tbl, f"{state_dir}/bloom_init")
     elif cfg.filter_mode == "cuckoo":
         # ONE resident filter for the whole run, sized for the expected
         # total; every iteration applies the wave DELTA (insert_batch of
@@ -1070,8 +1078,9 @@ def run_crawl(
             # many crawled pages point at move to the head of the politeness
             # queue. Urls not yet in the graph keep their current priority.
             # Deferred into the frontier-commit thunk below: pagerank runs
-            # eager checkpoints internally, and executing it here would
-            # SERIALIZE the whole refresh before the commit pool starts —
+            # eagerly (a crawl-sized edge log is ONE NumPy task, a larger one
+            # the checkpointed relational rounds), and executing it here
+            # would SERIALIZE the refresh before the commit pool starts —
             # inside the thunk it overlaps the independent url_seen / bloom
             # / records commits (guide §2.6). The edge log is complete at
             # this point (this wave's links were appended above), so ranks
@@ -1083,10 +1092,13 @@ def run_crawl(
                     spark.read.parquet(f"{state_dir}/edges"),
                     iterations=cfg.rank_iterations,
                 )
-                # [0,1] normalization rides the frontier join as a one-row
-                # broadcast instead of a separate max() collect job; ranks
-                # are always > 0 (base mass), so coalesce only covers the
-                # empty-graph null exactly like the old `or 1.0`
+                # pagerank returns MATERIALIZED ranks: the `_top` broadcast
+                # and the frontier join both read them, neither re-runs the
+                # rank computation. [0,1] normalization rides the frontier
+                # join as a one-row broadcast instead of a separate max()
+                # collect job; ranks are always > 0 (base mass), so coalesce
+                # only covers the empty-graph null exactly like the old
+                # `or 1.0`
                 top_df = ranks.agg(
                     F.coalesce(F.max("rank"), F.lit(1.0)).alias("_top")
                 )
@@ -1166,7 +1178,7 @@ def run_crawl(
             new_bloom = bloom_merge_delta_cogroup(
                 fetched.select(F.xxhash64("url").alias("url_hash")),
                 bloom_tbl,
-                n_shards=cfg.bloom_shards,
+                **bloom_size,
             )
 
         # 7. snapshot (data first, manifest last = atomic commit). The

@@ -41,12 +41,17 @@ class BloomFilter:
         self.k = k
         self.bits = bits if bits is not None else np.zeros(n_bits // 8 + 1, dtype=np.uint8)
 
-    @classmethod
-    def sized_for(cls, n_items: int, fpp: float = 0.01) -> "BloomFilter":
+    @staticmethod
+    def size_for(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
+        """(n_bits, k) for ``n_items`` at false-positive rate ``fpp``."""
         n_items = max(n_items, 1)
         n_bits = max(64, int(-n_items * math.log(fpp) / (math.log(2) ** 2)))
         k = max(1, round(n_bits / n_items * math.log(2)))
-        return cls(n_bits, k)
+        return n_bits, k
+
+    @classmethod
+    def sized_for(cls, n_items: int, fpp: float = 0.01) -> "BloomFilter":
+        return cls(*cls.size_for(n_items, fpp))
 
     def _positions(self, values: np.ndarray) -> np.ndarray:
         v = values.astype(np.uint64)
@@ -84,8 +89,7 @@ def build_bloom(
     """
     if n_items is None:
         n_items = df.count()
-    proto = BloomFilter.sized_for(n_items, fpp)
-    n_bits, k = proto.n_bits, proto.k
+    n_bits, k = BloomFilter.size_for(n_items, fpp)
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bf = BloomFilter(n_bits, k)
@@ -106,6 +110,18 @@ def build_bloom(
     for row in parts:
         out.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
     return out
+
+
+BLOOM_TABLE_SCHEMA = "shard int, n_bits long, k int, bits binary"
+
+
+def bloom_shard_size(
+    n_items: int, fpp: float = 0.01, n_shards: int = 32
+) -> tuple[int, int]:
+    """(n_bits, k) of ONE shard of a filter sized for ``n_items`` in
+    ``n_shards`` shards — per-shard arithmetic, nothing allocated. 1.2x
+    headroom absorbs shard-count variance around n/S."""
+    return BloomFilter.size_for(max(64, int(n_items / n_shards * 1.2)), fpp)
 
 
 class ShardedBloom:
@@ -139,11 +155,9 @@ class ShardedBloom:
     def sized_for(
         cls, n_items: int, fpp: float = 0.01, n_shards: int = 32
     ) -> "ShardedBloom":
-        # 1.2x headroom absorbs shard-count variance around n/S
-        per_shard = max(64, int(n_items / n_shards * 1.2))
+        n_bits, k = bloom_shard_size(n_items, fpp, n_shards)
         return cls(
-            {s: BloomFilter.sized_for(per_shard, fpp) for s in range(n_shards)},
-            n_shards,
+            {s: BloomFilter(n_bits, k) for s in range(n_shards)}, n_shards
         )
 
     def _sid(self, values: np.ndarray) -> np.ndarray:
@@ -191,9 +205,7 @@ class ShardedBloom:
             (s, bf.n_bits, bf.k, bytearray(bf.bits.tobytes()))
             for s, bf in self.shards.items()
         ]
-        return spark.createDataFrame(
-            rows, "shard int, n_bits long, k int, bits binary"
-        )
+        return spark.createDataFrame(rows, BLOOM_TABLE_SCHEMA)
 
 
 def build_bloom_sharded(
@@ -208,9 +220,7 @@ def build_bloom_sharded(
     and no collect ever handles more than one shard's bytes."""
     if n_items is None:
         n_items = df.count()
-    proto = ShardedBloom.sized_for(n_items, fpp, n_shards)
-    n_bits = proto.shards[0].n_bits
-    k = proto.shards[0].k
+    n_bits, k = bloom_shard_size(n_items, fpp, n_shards)
 
     def build_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         bf = BloomFilter(n_bits, k)
@@ -228,7 +238,7 @@ def build_bloom_sharded(
         df.select(F.col(hash_col).cast("long"))
         .withColumn("shard", F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int"))
         .groupBy("shard")
-        .applyInPandas(build_shard, "shard int, n_bits long, k int, bits binary")
+        .applyInPandas(build_shard, BLOOM_TABLE_SCHEMA)
         .collect()
     )
     blobs = {r["shard"]: (r["n_bits"], r["k"], r["bits"]) for r in rows}
@@ -301,11 +311,11 @@ def empty_bloom_shard_table(
 ) -> DataFrame:
     """An all-zero (shard, n_bits, k, bits) table, built DISTRIBUTED: one
     task per shard emits its own zero bitmap — the driver never holds a
-    single bitmap byte. Pair with bloom_merge_delta_cogroup to build or
-    incrementally update the filter-as-table (the 10^10-URL state path)."""
-    proto = ShardedBloom.sized_for(n_items, fpp, n_shards)
-    n_bits = proto.shards[0].n_bits
-    k = proto.shards[0].k
+    single bitmap byte. Merging into it gives the same bitmaps as merging
+    into an EMPTY table with ``bloom_merge_delta_cogroup(..., n_items=,
+    fpp=)``, which materializes a shard only when its first hashes arrive
+    (the crawl's start)."""
+    n_bits, k = bloom_shard_size(n_items, fpp, n_shards)
 
     def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -322,7 +332,7 @@ def empty_bloom_shard_table(
     return (
         spark.range(n_shards)
         .repartition(min(n_shards, 32))
-        .mapInPandas(make, "shard int, n_bits long, k int, bits binary")
+        .mapInPandas(make, BLOOM_TABLE_SCHEMA)
     )
 
 
@@ -331,34 +341,53 @@ def bloom_merge_delta_cogroup(
     shard_table: DataFrame,
     hash_col: str = "url_hash",
     n_shards: int = 32,
+    *,
+    n_items: int | None = None,
+    fpp: float = 0.01,
 ) -> DataFrame:
     """OR a wave's url hashes into the shard bitmaps — entirely executor-
     side. Cogroup on the shard key: each task gets one shard's delta hashes
     plus that shard's current bitmap and emits the updated row; shards with
     no delta pass through untouched. No filter bytes ever reach the driver —
     this is the MERGE INTO bloom_state analog for the zero-driver
-    ``filter_mode='bloom_table'`` fixpoint."""
+    ``filter_mode='bloom_table'`` fixpoint.
+
+    With the filter's sizing (``n_items``, ``fpp``) the table may be
+    partial — down to empty: a shard missing from it gets its zero bitmap
+    of ``bloom_shard_size(n_items, fpp, n_shards)`` when its first hashes
+    arrive, and any shard row of a different size raises (a filter sized
+    for another configuration would silently change the false-positive
+    rate). Without the sizing every shard must already be in the table
+    (``empty_bloom_shard_table``) and a missing one raises."""
+    size = None if n_items is None else bloom_shard_size(n_items, fpp, n_shards)
     h = hashes.select(F.col(hash_col).cast("long")).withColumn(
         "_shard", F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
     )
 
     def merge(key, h_pdf: pd.DataFrame, st_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(st_pdf):
-            # delta for a shard missing from the table: the table must be
-            # initialized with ALL shards (empty_bloom_shard_table) — a
-            # silently conjured empty bitmap here would hide sizing bugs
-            raise ValueError(f"bloom shard {key[0]} missing from shard table")
-        if not len(h_pdf):
-            return st_pdf[["shard", "n_bits", "k", "bits"]]
-        bf = BloomFilter(
-            int(st_pdf["n_bits"].iloc[0]),
-            int(st_pdf["k"].iloc[0]),
-            np.frombuffer(st_pdf["bits"].iloc[0], dtype=np.uint8).copy(),
-        )
+        shard = int(key[0])
+        if len(st_pdf):
+            n_bits, k = int(st_pdf["n_bits"].iloc[0]), int(st_pdf["k"].iloc[0])
+            if size is not None and (n_bits, k) != size:
+                raise ValueError(
+                    f"bloom shard {shard} has (n_bits, k) = {(n_bits, k)}, "
+                    f"the configured size is {size}"
+                )
+            if not len(h_pdf):
+                return st_pdf[["shard", "n_bits", "k", "bits"]]
+            bf = BloomFilter(
+                n_bits,
+                k,
+                np.frombuffer(st_pdf["bits"].iloc[0], dtype=np.uint8).copy(),
+            )
+        elif size is None:
+            raise ValueError(f"bloom shard {shard} missing from shard table")
+        else:
+            bf = BloomFilter(*size)
         bf.add(h_pdf[hash_col].to_numpy(dtype=np.int64))
         return pd.DataFrame(
             {
-                "shard": [int(st_pdf["shard"].iloc[0])],
+                "shard": [shard],
                 "n_bits": [bf.n_bits],
                 "k": [bf.k],
                 "bits": [bf.bits.tobytes()],
@@ -368,7 +397,7 @@ def bloom_merge_delta_cogroup(
     return (
         h.groupBy("_shard")
         .cogroup(shard_table.groupBy("shard"))
-        .applyInPandas(merge, "shard int, n_bits long, k int, bits binary")
+        .applyInPandas(merge, BLOOM_TABLE_SCHEMA)
     )
 
 

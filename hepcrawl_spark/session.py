@@ -17,6 +17,7 @@ deployment and merely *also* work on local[32]):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -75,9 +76,16 @@ def get_spark(
         b = b.config(k, v)
     fresh = SparkSession.getActiveSession() is None
     spark = b.getOrCreate()
-    if fresh and master.startswith("local"):
+    if fresh and _is_local_master(master):
         _prefork_python_workers(spark)
     return spark
+
+
+def _is_local_master(master: str) -> bool:
+    """``local`` or ``local[N]`` / ``local[*]`` / ``local[N,F]`` — one
+    in-process executor. ``local-cluster[...]`` launches separate executor
+    JVMs, which a driver-side pre-fork cannot warm."""
+    return re.fullmatch(r"local(\[[^\]]*\])?", master) is not None
 
 
 def _prefork_python_workers(spark: SparkSession) -> None:

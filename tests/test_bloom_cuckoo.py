@@ -1,5 +1,6 @@
 import numpy as np
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -192,3 +193,81 @@ def test_cuckoo_empty_shards_sized_for_full_capacity(spark):
     delta = np.arange(0, 50_000, dtype=np.int64) * 2654435761 % (2**62)
     assert ccf.insert_batch(delta.astype(np.uint64)) == 0
     assert ccf.might_contain(delta.astype(np.uint64)).all()
+
+
+def _bits_by_shard(table):
+    return {r["shard"]: (r["n_bits"], r["k"], bytes(r["bits"])) for r in table.collect()}
+
+
+def test_bloom_table_merge_into_empty_table_matches_zero_table(spark):
+    """The crawl starts bloom_table from an EMPTY table: merging with the
+    filter's sizing must create each touched shard exactly as the all-zero
+    table would have held it, and leave untouched shards absent."""
+    from hepcrawl_spark.operators.bloom import (
+        BLOOM_TABLE_SCHEMA,
+        bloom_merge_delta_cogroup,
+        bloom_shard_size,
+        empty_bloom_shard_table,
+    )
+
+    size = dict(n_items=20_000, fpp=0.01)
+    # shards 0..5 of 8 receive hashes; 6 and 7 stay untouched
+    delta = spark.range(0, 3000).select(
+        (F.col("id") * 8 + F.col("id") % 6).alias("url_hash")
+    )
+    from_zero = _bits_by_shard(
+        bloom_merge_delta_cogroup(
+            delta, empty_bloom_shard_table(spark, n_shards=8, **size), n_shards=8
+        )
+    )
+    from_empty = _bits_by_shard(
+        bloom_merge_delta_cogroup(
+            delta, spark.createDataFrame([], BLOOM_TABLE_SCHEMA), n_shards=8, **size
+        )
+    )
+    assert sorted(from_empty) == list(range(6))
+    assert {s: from_zero[s] for s in from_empty} == from_empty
+    n_bits, k = bloom_shard_size(n_shards=8, **size)
+    zero = bytes(n_bits // 8 + 1)
+    assert from_zero[6] == from_zero[7] == (n_bits, k, zero)
+
+
+def test_bloom_probe_reads_missing_shards_as_not_seen(spark):
+    from hepcrawl_spark.operators.bloom import (
+        BLOOM_TABLE_SCHEMA,
+        bloom_merge_delta_cogroup,
+        bloom_probe_cogroup,
+    )
+
+    seen = spark.range(0, 500).select((F.col("id") * 4).alias("url_hash"))  # shard 0
+    table = bloom_merge_delta_cogroup(
+        seen, spark.createDataFrame([], BLOOM_TABLE_SCHEMA), n_shards=4, n_items=2000
+    )
+    frontier = spark.range(0, 2000).select(F.col("id").alias("url_hash"))
+    got = {
+        r["url_hash"]: r["_maybe"]
+        for r in bloom_probe_cogroup(frontier, table, n_shards=4).collect()
+    }
+    assert all(got[h] for h in range(0, 2000, 4))  # every seen hash hits
+    # shards 1-3 are absent from the table: nothing there was seen
+    assert not any(got[h] for h in range(2000) if h % 4)
+
+
+def test_bloom_merge_rejects_shard_of_wrong_size(spark):
+    from pyspark.errors import PythonException
+
+    from hepcrawl_spark.operators.bloom import (
+        bloom_merge_delta_cogroup,
+        empty_bloom_shard_table,
+    )
+
+    table = empty_bloom_shard_table(spark, n_items=1000, n_shards=4)
+    delta = spark.range(0, 100).select(F.col("id").alias("url_hash"))
+    # sized for 1000 items, merged under a 50,000-item configuration
+    merged = bloom_merge_delta_cogroup(delta, table, n_shards=4, n_items=50_000)
+    with pytest.raises(PythonException, match="configured size"):
+        merged.collect()
+    # without the sizing the table must hold every shard, as before
+    partial = table.filter("shard != 2")
+    with pytest.raises(PythonException, match="missing from shard table"):
+        bloom_merge_delta_cogroup(delta, partial, n_shards=4).collect()

@@ -7,6 +7,7 @@ url_seen set and identical per-iteration schedule, regardless of which
 membership filter accelerates the gate and regardless of checkpoint/resume.
 """
 
+import os
 import shutil
 
 import pyspark.sql.functions as F
@@ -99,6 +100,8 @@ def test_bloom_table_mode_keeps_filter_off_the_driver(spark, corpus, seeds, tmp_
                     filter_mode="bloom_table", state_dir=sd, n_expected_urls=5000),
     )
     assert res.total_fetched > 0
+    # a fresh run starts from an empty table: no all-zero table is written
+    assert not os.path.exists(f"{sd}/bloom_init")
     # resume also comes from the bloom parquet snapshot, not a driver build
     res2 = run_crawl(
         spark, corpus, seeds,
@@ -107,6 +110,81 @@ def test_bloom_table_mode_keeps_filter_off_the_driver(spark, corpus, seeds, tmp_
         resume=True,
     )
     assert len(res2.iterations) >= 1
+    assert not os.path.exists(f"{sd}/bloom_init")
+    # ...and it lands where a straight run does
+    sd_straight = str(tmp_path / "bt_straight")
+    run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=4, max_per_host=15, salt=1,
+                    filter_mode="bloom_table", state_dir=sd_straight,
+                    n_expected_urls=5000),
+    )
+    assert _final_seen(spark, sd) == _final_seen(spark, sd_straight)
+
+
+def test_bloom_table_resume_without_snapshot_rebuilds_from_url_seen(
+    spark, corpus, seeds, tmp_path
+):
+    """Resuming in bloom_table mode from state that carries no bloom
+    snapshot rebuilds the filter from url_seen, merging into an empty
+    table; the crawl then matches a straight unfiltered run."""
+    kw = dict(max_per_host=15, salt=1, n_expected_urls=5000)
+    sd = str(tmp_path / "rebuild")
+    run_crawl(spark, corpus, seeds,
+              CrawlConfig(max_iterations=2, filter_mode="none", state_dir=sd, **kw))
+    res = run_crawl(
+        spark, corpus, seeds,
+        CrawlConfig(max_iterations=4, filter_mode="bloom_table", state_dir=sd, **kw),
+        resume=True,
+    )
+    assert res.total_fetched > 0
+    assert os.path.exists(f"{sd}/bloom_init")
+    sd_straight = str(tmp_path / "rebuild_straight")
+    run_crawl(spark, corpus, seeds,
+              CrawlConfig(max_iterations=4, filter_mode="none",
+                          state_dir=sd_straight, **kw))
+    assert _final_seen(spark, sd) == _final_seen(spark, sd_straight)
+
+
+def test_production_profile_frontier_and_seen_stay_disjoint(spark, corpus, tmp_path):
+    """After EVERY iteration of a production-profile crawl (bloom_table,
+    merge url_seen, adaptive salt, PageRank refresh, RFC 9309 robots,
+    max_attempts=2) no URL is both in the frontier and in url_seen. This is
+    why the bloom probe flags nothing and the crawl-once gate removes
+    nothing on such a crawl: every URL that reaches them is unseen."""
+    from hepcrawl_spark.sources import merge_store
+
+    pages = corpus.filter("page_id % 13 != 5")  # failed fetches -> retries
+    seeds = pages.orderBy("page_id").limit(40).select(
+        "url", "host", F.lit(1.0).alias("priority"),
+        F.col("warc_ts").alias("discovered_ts"),
+    )
+    robots = spark.createDataFrame(
+        [("host3.example.org", "disallow", "/p/1"),
+         ("host3.example.org", "allow", "/p/12")],
+        "host string, allow string, path_prefix string",
+    )
+    sd = str(tmp_path / "prod")
+    res = run_crawl(
+        spark, pages, seeds,
+        CrawlConfig(max_iterations=4, max_per_host=1_000_000,
+                    filter_mode="bloom_table", n_expected_urls=5000,
+                    salt_mode="adaptive", seen_store="merge", seen_buckets=4,
+                    rank_priorities_every=2, max_attempts=2,
+                    snapshot_every=1, keep_snapshots=10, state_dir=sd),
+        robots=robots,
+    )
+    seen_dir = f"{sd}/url_seen_merge"
+    snap, retried = 0, 0
+    for it in res.iterations:
+        snap += it.fetched > 0  # every non-empty iteration merges once
+        front = spark.read.parquet(f"{sd}/iter_{it.iteration:04d}/frontier")
+        seen = merge_store.read_table(spark, seen_dir, snapshot=snap)
+        assert seen.count() > 0
+        assert front.join(seen, "url", "inner").count() == 0, it.iteration
+        retried += front.filter("attempt > 0").count()
+    assert snap == merge_store.current_snapshot(seen_dir) and snap >= 3
+    assert retried > 0
 
 
 def test_auto_filter_mode_switches_on_scale(spark, corpus, seeds, tmp_path, monkeypatch):
@@ -400,6 +478,35 @@ def test_fully_blocked_wave_does_not_halt_crawl(spark, corpus, tmp_path):
     # iteration 1 fetches the allowed URL.
     assert res.total_fetched >= 1
     assert allowed["url"] in _final_seen(spark, sd)
+
+
+def test_fully_blocked_first_wave_commits_empty_bloom_table(spark, corpus, tmp_path):
+    """bloom_table starts from an empty table, so an iteration 0 that
+    fetches nothing commits that empty table; the crawl then proceeds
+    exactly like an unfiltered one."""
+    blocked, allowed = (
+        corpus.filter("host = 'host2.example.org'").orderBy("page_id").limit(2).collect()
+    )
+    seeds = spark.createDataFrame(
+        [(blocked["url"], blocked["host"], 2.0, blocked["warc_ts"]),
+         (allowed["url"], allowed["host"], 1.0, allowed["warc_ts"])],
+        "url string, host string, priority double, discovered_ts timestamp",
+    )
+    robots = spark.createDataFrame(
+        [(blocked["host"], f"/p/{blocked['page_id']}", "disallow")],
+        "host string, path_prefix string, allow string",
+    )
+    fetched = {}
+    for mode in ("none", "bloom_table"):
+        res = run_crawl(
+            spark, corpus, seeds,
+            CrawlConfig(max_iterations=4, max_per_host=1, salt=1, filter_mode=mode,
+                        n_expected_urls=5000, state_dir=str(tmp_path / mode)),
+            robots=robots,
+        )
+        fetched[mode] = [i.fetched for i in res.iterations]
+    assert fetched["bloom_table"][0] == 0
+    assert fetched["bloom_table"] == fetched["none"] and sum(fetched["none"]) > 0
 
 
 def test_meta_threading_is_pay_for_use(spark, corpus, seeds, tmp_path):

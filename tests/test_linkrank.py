@@ -75,3 +75,87 @@ def test_hits_bipartite_hubs_vs_authorities(spark):
     assert out["a2"].authority > out["a1"].authority
     assert abs(out["a1"].authority - out["a3"].authority) < 1e-12
     assert abs(out["h1"].hub - 0.5) < 1e-9
+
+
+def _random_graph(seed, n_nodes=120, n_edges=600):
+    """Seeded edge list with duplicate edges and dangling nodes (ids at or
+    above ``n_nodes - 15`` only ever appear as destinations)."""
+    import random
+
+    rng = random.Random(seed)
+    pairs = [
+        (rng.randrange(n_nodes - 15), rng.randrange(n_nodes))
+        for _ in range(n_edges)
+    ]
+    return pairs + pairs[:50]  # duplicates
+
+
+def _kernel_ranks(monkeypatch, e, **kw):
+    """Ranks from the kernel path, which a small edge list takes under the
+    session's default threshold: the relational path is forbidden."""
+    from hepcrawl_spark.operators import linkrank as L
+
+    def _no_relational(*a, **k):
+        raise AssertionError("small edge list took the relational path")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(L, "_pagerank_relational", _no_relational)
+        return {r["node"]: r["rank"] for r in L.pagerank(e, **kw).collect()}
+
+
+def _relational_ranks(spark, e, **kw):
+    """Ranks from the relational path, forced by disabling broadcasts; the
+    session's threshold is restored afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        return {r["node"]: r["rank"] for r in pagerank(e, **kw).collect()}
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("node_type", ["long", "string"])
+def test_kernel_matches_relational_path(spark, monkeypatch, node_type):
+    pairs = _random_graph(7)
+    if node_type == "string":
+        pairs = [(f"https://h{s % 7}.example.org/p/{s}",
+                  f"https://h{t % 7}.example.org/p/{t}") for s, t in pairs]
+    e = spark.createDataFrame(pairs, f"src {node_type}, dst {node_type}")
+    kern = _kernel_ranks(monkeypatch, e, iterations=6)
+    rel = _relational_ranks(spark, e, iterations=6)
+    assert set(kern) == set(rel) and len(kern) > 100
+    assert max(abs(kern[v] - rel[v]) for v in kern) <= 1e-12
+    for got in (kern, rel):
+        assert abs(sum(got.values()) - 1.0) <= 1e-12
+
+
+def test_kernel_and_relational_stop_after_same_rounds(spark, monkeypatch):
+    import numpy as np
+
+    from hepcrawl_spark.operators.linkrank import pagerank_arrays
+
+    pairs = _random_graph(11)
+    src, dst = (np.array(c, dtype=np.int64) for c in zip(*pairs))
+    tol = 1e-4
+    _, _, rounds = pagerank_arrays(src, dst, iterations=50, tol=tol)
+    assert 2 < rounds < 50  # tol, not the cap, stops it
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    kern = _kernel_ranks(monkeypatch, e, iterations=50, tol=tol)
+    rel = _relational_ranks(spark, e, iterations=50, tol=tol)
+    fixed = _kernel_ranks(monkeypatch, e, iterations=rounds)
+    shorter = _kernel_ranks(monkeypatch, e, iterations=rounds - 1)
+    for got in (kern, rel):
+        assert max(abs(got[v] - fixed[v]) for v in got) <= 1e-12
+        # one round fewer is measurably different: the round count is pinned
+        assert max(abs(got[v] - shorter[v]) for v in got) > 1e-9
+
+
+def test_kernel_ignores_null_endpoints_and_empty_graph(spark):
+    e = spark.createDataFrame(
+        [(0, 1), (1, 0), (None, 1), (2, None)], "src long, dst long"
+    )
+    got = {r["node"]: r["rank"] for r in pagerank(e, iterations=5).collect()}
+    assert set(got) == {0, 1}
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert pagerank(empty, iterations=5).count() == 0

@@ -27,5 +27,12 @@ def test_get_spark_skips_warmup_when_session_exists(spark, monkeypatch):
         session_mod, "_prefork_python_workers", lambda s: calls.append(s)
     )
     s = get_spark(app_name="already-up")
-    assert s is spark.getActiveSession() or s is not None
+    assert s is spark
     assert calls == [], "warmup must not re-run when joining a live session"
+
+
+def test_only_in_process_local_masters_prefork():
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        assert session_mod._is_local_master(master), master
+    for master in ("local-cluster[2,1,1024]", "spark://h:7077", "yarn", "localhost"):
+        assert not session_mod._is_local_master(master), master
